@@ -69,13 +69,15 @@ def parallel_branches(*builders: Callable[[], Any]) -> list[Any]:
     in argument order.
 
     Failure semantics: the first failing branch (in argument order)
-    wins; the MOMENT any branch fails, queued-but-not-yet-started
-    sibling builders are cancelled so branches with on-disk side
-    effects (store writes, streaming spin-ups) cannot begin after the
-    gate has already failed, and the call WAITS for already-running
-    siblings to drain (Spark driver threads aren't interruptible
-    mid-build) before re-raising — so a failed gate's side effects
-    never interleave with whatever the caller does next.
+    wins. Once the caller's wait sees a failure, it cancels the sibling
+    builders still queued, so branches with on-disk side effects
+    (store writes, streaming spin-ups) usually do not begin after the
+    gate has failed. This is best effort, not a guarantee: the failed
+    branch frees its pool slot before the caller wakes, and a queued
+    sibling can start in that window. The call then WAITS for every
+    started sibling to drain (Spark driver threads aren't
+    interruptible mid-build) before re-raising — so a failed gate's
+    side effects never interleave with whatever the caller does next.
 
     Uses ``pyspark.inheritable_thread_target`` so JVM thread-local
     properties (job group/description/tags) propagate to the worker

@@ -18,20 +18,35 @@ schemas*, not the number of files — with a million homogeneous parquet
 files the plan is a single scan node. Parquet schema probing reads only
 footers (pyarrow, no Spark job); CSV probing samples ``infer_rows`` rows
 per distinct header shape.
+
+Plan cost per schema group is one read and ONE JVM projection: the
+aligner renders rename/cast/null-fill/NA-sentinel nulling as SQL text
+for a single ``selectExpr`` against the schema the probe already knows
+(py4j ``Column`` building costs a round trip per expression node).
+Parquet groups read with their probed schema unless a footer type is
+``spark_hostile``, so a drift concat plans without Spark jobs (Spark's
+own inference is one job per read). Each group's scan would size its
+splits from its own bytes — one task per small file — so a multi-group
+union is coalesced to the partition count ONE scan over every file
+would get (``single_scan_partitions``); a single-group plan is that one
+scan and keeps its width.
 """
 
 from __future__ import annotations
 
 import contextlib
 import io
-import json
 import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql import types as T
 
-from streaming_parquet_spark.plans.align import _effective_columns, concat_aligned
+from streaming_parquet_spark.plans.align import (
+    _effective_columns,
+    align_dataframe,
+    union_aligned,
+)
 from streaming_parquet_spark.plans.unify import UnifiedSchema, unify_schemas
 from streaming_parquet_spark.runspec import RunSpec
 from streaming_parquet_spark.sinks.writers import (
@@ -52,16 +67,97 @@ from streaming_parquet_spark.sources.discover import (
 )
 from streaming_parquet_spark.sources.readers import (
     CsvOptions,
+    csv_reader,
     infer_csv_schema_prefix,
     infer_csv_schemas_per_file,
     infer_jsonl_schema_prefix,
-    read_csv,
     read_jsonl,
     read_orc,
     read_parquet,
     read_text,
+    readable_schema,
     TXT_SCHEMA,
 )
+
+
+def spark_hostile(t) -> bool:
+    """True when Spark's parquet reader disagrees with the footer
+    probe's mapping of the Arrow type ``t``, or cannot read the type
+    back, anywhere in its nesting. Two decisions depend on this: the
+    columnar passthrough gate (``Engine._passthrough_arrow_schema``)
+    and reading a parquet group with its probed schema instead of
+    Spark's own inference (``Engine.dataframe``).
+
+    * ns timestamps, which also covers INT96: pyarrow renders INT96 as
+      timestamp[ns] (probed TimestampNTZ) while Spark reads it as
+      session-tz TIMESTAMP_LTZ, and Spark 4 cannot read INT64
+      TIMESTAMP(NANOS) at all;
+    * unsigned ints: Spark reads UINT64 as DECIMAL(20,0), the probe
+      folds it into LongType;
+    * null, duration and time columns: Spark reads them as INT32,
+      INT64 and an illegal type where the probe says Null, an interval
+      and TimeType."""
+    import pyarrow.types as pat
+
+    if pat.is_timestamp(t) and t.unit == "ns":
+        return True
+    if (
+        pat.is_unsigned_integer(t)
+        or pat.is_null(t)
+        or pat.is_duration(t)
+        or pat.is_time(t)
+    ):
+        return True
+    if pat.is_list(t) or pat.is_large_list(t) or pat.is_fixed_size_list(t):
+        return spark_hostile(t.value_type)
+    if pat.is_dictionary(t):
+        return spark_hostile(t.value_type)
+    if pat.is_struct(t):
+        return any(spark_hostile(t.field(i).type) for i in range(t.num_fields))
+    if pat.is_map(t):
+        return spark_hostile(t.key_type) or spark_hostile(t.item_type)
+    return False
+
+
+def single_scan_partitions(
+    sizes: list[int],
+    max_partition_bytes: int,
+    open_cost: int,
+    min_partitions: int,
+) -> int:
+    """The partition count Spark gives ONE file scan over files of
+    ``sizes`` bytes: ``FilePartition.maxSplitBytes`` over the total
+    bytes plus ``open_cost`` per file, each file split into chunks of
+    that size, then next-fit-decreasing packing. Treats every file as
+    splittable (a compressed or multiline CSV is one chunk in Spark), so
+    on such inputs the count can exceed Spark's by their splits."""
+    total = sum(sz + open_cost for sz in sizes)
+    max_split = min(
+        max_partition_bytes, max(open_cost, total // max(1, min_partitions))
+    )
+    chunks = []
+    for sz in sizes:
+        chunks += [max_split] * (sz // max_split)
+        if sz % max_split:
+            chunks.append(sz % max_split)
+    chunks.sort(reverse=True)
+    partitions, current = 0, 0  # every chunk is > 0 bytes
+    for length in chunks:
+        if current and current + length > max_split:
+            partitions += 1
+            current = 0
+        current += length + open_cost
+    return partitions + int(current > 0)
+
+
+def _conf_bytes(value: str) -> int:
+    """A JVM byte-size conf value (``4194304b``, ``8m``, ``1g``) in bytes."""
+    v = value.strip().lower()
+    units = {"t": 1 << 40, "g": 1 << 30, "m": 1 << 20, "k": 1 << 10, "b": 1}
+    v = v[:-1] if v.endswith("b") and len(v) > 1 and v[-2] in units else v
+    if v and v[-1] in units:
+        return int(v[:-1]) * units[v[-1]]
+    return int(v)
 
 
 @dataclass
@@ -130,11 +226,10 @@ class Engine:
             # re-open every file (a second and third driver sweep on a
             # million-file corpus — review r14). Cached per run;
             # probe_schemas clears it. INT96 needs no separate
-            # tracking: pyarrow renders it as timestamp[ns], which the
-            # gate's hostile-type walk disqualifies.
+            # tracking: pyarrow renders it as timestamp[ns], which
+            # ``spark_hostile`` refuses.
             pf = pq.ParquetFile(path)
             arrow = pf.schema_arrow
-            self._arrow_probe[path] = (arrow, pf.metadata.num_rows)
             # prefer_timestamp_ntz: a tz-less parquet timestamp IS the
             # unified DATETIME (TimestampNTZ — typesys maps every
             # datetime kind there), so probing it as NTZ lets the
@@ -142,7 +237,12 @@ class Engine:
             # tz-adjusted columns still probe as TimestampType and take
             # the casting plan. Unification is unaffected: both types
             # fold into the same DATETIME kind.
-            return from_arrow_schema(arrow, prefer_timestamp_ntz=True)
+            schema = from_arrow_schema(arrow, prefer_timestamp_ntz=True)
+            # cached only once the mapping succeeded: a cached footer
+            # means this schema came from the pyarrow probe, which the
+            # explicit-schema parquet read relies on
+            self._arrow_probe[path] = (arrow, pf.metadata.num_rows)
+            return schema
         except Exception:
             return self.spark.read.parquet(path).schema
 
@@ -294,12 +394,21 @@ class Engine:
         self, spec: RunSpec, files: list[InputFile] | None = None,
         schemas: list[T.StructType] | None = None,
     ) -> tuple[DataFrame, UnifiedSchema, list[InputFile]]:
-        """Build the aligned UNION ALL DataFrame for a spec (lazy)."""
+        """Build the aligned UNION ALL DataFrame for a spec (lazy).
+
+        One multi-path read and ONE projection (``align_dataframe``'s
+        single ``selectExpr``) per ``(format, schema)`` group. CSV and
+        JSONL groups read with their probed schema, parquet groups too
+        when every member's footer probe passed ``spark_hostile``, so
+        for such inputs the plan starts no Spark job and the aligner
+        needs no ``df.schema`` round trip. With two or more groups the
+        union coalesces to the width one scan over all the files would
+        have (see ``_tune_split_size``)."""
         files = files if files is not None else self.discover(spec)
         if not files:
             raise ValueError("no input files discovered")
 
-        self._tune_split_size(files)
+        max_partition_bytes = self._tune_split_size(files)
         if schemas is None:
             schemas = self.probe_schemas(files, spec)
         unified = unify_schemas(
@@ -307,46 +416,75 @@ class Engine:
         )
 
         # Group files by (format, schema) -> one multi-path read per group.
-        groups: dict[tuple, list[str]] = {}
+        groups: dict[tuple, tuple[list[str], T.StructType]] = {}
         for f, s in zip(files, schemas):
-            groups.setdefault((f.format, s.json()), []).append(f.path)
+            groups.setdefault((f.format, s.json()), ([], s))[0].append(f.path)
 
-        dfs = []
-        for (fmt, schema_json), paths in groups.items():
+        csv = None
+        aligned = []
+        for (fmt, _json), (paths, schema) in groups.items():
+            na_values: tuple[str, ...] = ()
             if fmt is InputFormat.PARQUET:
-                dfs.append(read_parquet(self.spark, paths))
+                if not self._probe_is_readable(paths):
+                    # Spark's own inference (a footer-reading job); the
+                    # aligner then asks the JVM for the real schema
+                    df, schema = read_parquet(self.spark, paths), None
+                else:
+                    df = read_parquet(self.spark, paths, schema=schema)
             elif fmt is InputFormat.ORC:
-                dfs.append(read_orc(self.spark, paths))
+                df, schema = read_orc(self.spark, paths), None
             elif fmt is InputFormat.TXT:
-                dfs.append(read_text(self.spark, paths))
+                df = read_text(self.spark, paths)
             elif fmt is InputFormat.JSONL:
-                schema = T.StructType.fromJson(json.loads(schema_json))
-                dfs.append(
-                    read_jsonl(self.spark, paths, schema, encoding=spec.encoding)
-                )
+                df = read_jsonl(self.spark, paths, schema, encoding=spec.encoding)
+                schema = readable_schema(schema)
             else:
-                schema = T.StructType.fromJson(json.loads(schema_json))
                 # The CSV scan can't materialize NullType (probe result
                 # for valueless columns) — read those as string; every
                 # value is null, and the aligner casts to the unified
-                # type anyway.
-                read_schema = T.StructType(
-                    [
-                        T.StructField(
-                            fld.name,
-                            T.StringType()
-                            if isinstance(fld.dataType, T.NullType)
-                            else fld.dataType,
-                            fld.nullable,
-                        )
-                        for fld in schema.fields
-                    ]
+                # type anyway. The NA sentinels beyond the scan's one
+                # nullValue are nulled inside the same projection.
+                if csv is None:
+                    csv = csv_reader(self.spark, self._csv_opts(spec))
+                schema = readable_schema(schema)
+                df = csv.schema(schema).csv(paths)
+                na_values = tuple(spec.na_values[1:])
+            aligned.append(
+                align_dataframe(
+                    df, unified, spec.columns, spec.exclude,
+                    schema=schema, na_values=na_values,
                 )
-                dfs.append(
-                    read_csv(self.spark, paths, self._csv_opts(spec), schema=read_schema)
-                )
-        df = concat_aligned(dfs, unified, include=spec.columns, exclude=spec.exclude)
+            )
+        df = union_aligned(aligned)
+        if len(aligned) > 1:
+            df = df.coalesce(self._single_scan_width(files, max_partition_bytes))
         return df, unified, files
+
+    def _probe_is_readable(self, paths: list[str]) -> bool:
+        """True when every file's schema came from the pyarrow footer
+        probe and no column type is ``spark_hostile`` — then the probed
+        schema is exactly what Spark's inference would return."""
+        for path in paths:
+            probe = self._arrow_probe.get(path)
+            if probe is None or any(spark_hostile(t) for t in probe[0].types):
+                return False
+        return True
+
+    def _single_scan_width(
+        self, files: list[InputFile], max_partition_bytes: int
+    ) -> int:
+        """``single_scan_partitions`` under this session's file-scan
+        confs (three conf reads)."""
+        conf = self.spark.conf
+        min_parts = conf.get("spark.sql.files.minPartitionNum", None) or conf.get(
+            "spark.sql.leafNodeDefaultParallelism", None
+        )
+        return max(1, single_scan_partitions(
+            [f.size for f in files],
+            max_partition_bytes,
+            _conf_bytes(conf.get("spark.sql.files.openCostInBytes")),
+            int(min_parts or self.spark.sparkContext.defaultParallelism or 1),
+        ))
 
     # ---- entry points (SURVEY.md §3) ---------------------------------
 
@@ -599,12 +737,9 @@ class Engine:
           needed" is wrong, the Catalyst plan would produce different
           values, and worse, pyarrow re-encodes INT96 as INT64
           TIMESTAMP(NANOS), which Spark 4 refuses to read at all
-          (PARQUET_TYPE_ILLEGAL). Because pyarrow renders INT96 as
-          timestamp[ns], the ns-unit disqualifier below covers it and
-          native ns timestamps with one check. Same story for unsigned
-          ints (Spark reads UINT64 as DECIMAL(20,0) while the probe
-          folds it into LongType). Any such type, anywhere in a gated
-          column's nesting, disqualifies.
+          (PARQUET_TYPE_ILLEGAL). Same story for unsigned ints (Spark
+          reads UINT64 as DECIMAL(20,0)). Any ``spark_hostile`` type,
+          anywhere in a gated column's nesting, disqualifies.
         * **Per-bin schema drift.** Distinct Arrow types can collapse to
           one Spark type (string vs large_string, timestamp units), so a
           bin-local "first file wins" schema could emit an output
@@ -616,36 +751,16 @@ class Engine:
           construction.
 
         Zero extra I/O in the normal path: the schema probe's single
-        footer sweep already cached (arrow schema, INT96 roots,
-        num_rows) per file (``self._arrow_probe``); only files whose
-        pyarrow probe fell back to the Spark reader re-read here (a
-        thread-pooled footer read each), and any file unreadable that
-        way disqualifies."""
+        footer sweep already cached (arrow schema, num_rows) per file
+        (``self._arrow_probe``); only files whose pyarrow probe fell
+        back to the Spark reader re-read here (a thread-pooled footer
+        read each), and any file unreadable that way disqualifies."""
         from concurrent.futures import ThreadPoolExecutor
 
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         want = set(cols)
-
-        def _spark_hostile(t: pa.DataType) -> bool:
-            # Types whose transcoded output Spark cannot read back, or
-            # whose probe mapping disagrees with Spark's reader.
-            if pa.types.is_timestamp(t) and t.unit == "ns":
-                return True
-            if pa.types.is_unsigned_integer(t):
-                return True
-            if (
-                pa.types.is_list(t)
-                or pa.types.is_large_list(t)
-                or pa.types.is_fixed_size_list(t)
-            ):
-                return _spark_hostile(t.value_type)
-            if pa.types.is_struct(t):
-                return any(_spark_hostile(t.field(i).type) for i in range(t.num_fields))
-            if pa.types.is_map(t):
-                return _spark_hostile(t.key_type) or _spark_hostile(t.item_type)
-            return False
 
         def _probe(path: str):
             pf = pq.ParquetFile(path)
@@ -679,7 +794,7 @@ class Engine:
                 return None  # duplicate field names etc.
             for name in cols:
                 fld = fields.get(name)
-                if fld is None or _spark_hostile(fld.type):
+                if fld is None or spark_hostile(fld.type):
                     return None
                 prev = canonical.get(name)
                 if prev is None:
@@ -715,13 +830,22 @@ class Engine:
                 pool.map(lambda f: pq.ParquetFile(f).metadata.num_rows, file_paths)
             )
 
-    def _tune_split_size(self, files: list[InputFile]) -> None:
+    def _tune_split_size(self, files: list[InputFile]) -> int:
         """Size ``spark.sql.files.maxPartitionBytes`` so the scan yields
-        ~3 splits per core. The 128 MB default packs small-file corpora
-        into a handful of tasks and idles the cluster (measured 2x on a
-        0.7 GB / 64-file conversion); large inputs clamp back to 128 MB,
-        so cluster-scale behavior is unchanged. Session-level setting —
-        read at scan planning of this run's queries."""
+        ~3 splits per core, and return the value set. The 128 MB default
+        packs small-file corpora into a handful of tasks and idles the
+        cluster (measured 2x on a 0.7 GB / 64-file conversion); large
+        inputs clamp back to 128 MB, so cluster-scale behavior is
+        unchanged. Session-level setting — read at scan planning of this
+        run's queries.
+
+        Spark sizes each scan's splits from that scan's bytes alone, so
+        a drift concat of many small schema groups would plan one task
+        per file (64 tasks and 64 output files for 64 files of 60 KB).
+        ``dataframe`` therefore coalesces a multi-group union to
+        ``single_scan_partitions`` under the value returned here: the
+        width one scan over every file would get. A single-group plan is
+        that one scan and keeps its own width."""
         total = sum(f.size for f in files)
         cores = self.spark.sparkContext.defaultParallelism or 1
         # Floor at 16 MB: smaller splits fragment parquet row groups
@@ -729,6 +853,7 @@ class Engine:
         # slower than the 128 MB default on a row-group-heavy corpus.
         target = max(16 << 20, min(128 << 20, total // (3 * cores) or (16 << 20)))
         self.spark.conf.set("spark.sql.files.maxPartitionBytes", str(target))
+        return target
 
     def _rolling_records(
         self, spec: RunSpec, files: list[InputFile]

@@ -45,6 +45,10 @@ def connected_components(
     Returns (id, component) where component = min node id reachable
     from id. Only nodes appearing in ``pairs`` are returned (isolated
     docs are their own cluster by definition — callers left-join).
+
+    ``max_iter`` must be >= 1: ``max_iter=0`` raises ``ValueError``.
+    Earlier versions accepted it and returned the initial labels (every
+    node its own component) unchanged.
     """
     if max_iter < 1:
         # the initial label set is lazy (it rides round 1's job); with

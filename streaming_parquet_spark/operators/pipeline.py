@@ -29,17 +29,6 @@ from streaming_parquet_spark.functions.portable import (
 )
 
 
-def with_hash_bucket(
-    df: DataFrame, id_col: str = "doc_id", buckets: int = 100,
-    out_col: str = "bucket",
-) -> DataFrame:
-    """Stable [0, buckets) bucket from an integer id (portable
-    arithmetic — see functions.portable.hash_bucket_expr)."""
-    return df.withColumn(
-        out_col, F.expr(hash_bucket_expr("spark", id_col, buckets))
-    )
-
-
 def hash_sample(
     df: DataFrame, pct: int, id_col: str = "doc_id"
 ) -> DataFrame:

@@ -106,13 +106,6 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _duck_minhash_cols(k: int) -> str:
-    wh = _duck_shingle_hashes()
-    return ", ".join(
-        f"{minhash_expr('duckdb', wh, i)} AS m{i}" for i in range(k)
-    )
-
-
 _DUCK_DEDUP_MINHASH_SIG = f"""
     WITH h AS MATERIALIZED (
       SELECT doc_id, {_duck_shingle_hashes()} AS wh FROM documents

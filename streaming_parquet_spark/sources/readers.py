@@ -12,9 +12,10 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from streaming_parquet_spark.plans.align import quote_ident, sql_string
 
 # Default NA sentinels (reference src/cli.rs:41-43: "NA,null,\\N").
 DEFAULT_NA_VALUES = ("NA", "null", "\\N")
@@ -39,7 +40,6 @@ class CsvOptions:
     encoding: str = "utf8"
     na_values: tuple[str, ...] = DEFAULT_NA_VALUES
     infer_rows: int = 1000               # --infer-rows schema-inference sample
-    infer_schema: bool = True
     # Quoted fields containing newlines (the reference's csv crate parses
     # them natively). Spark's default line-splittable reader breaks such
     # records; multiline=True handles them at the cost of one task per
@@ -48,24 +48,29 @@ class CsvOptions:
     multiline: bool = False
 
 
-def read_csv(
-    spark: SparkSession,
-    paths: list[str] | str,
-    opts: CsvOptions | None = None,
-    schema: T.StructType | None = None,
-) -> DataFrame:
-    """Read CSV with the reference's option semantics.
+def readable_schema(schema: T.StructType) -> T.StructType:
+    """Scans can't materialize NullType (the probe result for valueless
+    columns) — read as string, values are null either way."""
+    return T.StructType(
+        [
+            T.StructField(
+                f.name,
+                T.StringType() if isinstance(f.dataType, T.NullType) else f.dataType,
+                f.nullable,
+            )
+            for f in schema.fields
+        ]
+    )
 
-    With ``headers=False``, columns are named ``col_1..col_N``
-    (csv_in.rs:68-78 synthesizes the same names). Values matching any NA
-    sentinel become null before type coercion, mirroring csv_in.rs:129-135
-    where sentinel checks precede parsing.
-    """
-    opts = opts or CsvOptions()
-    if isinstance(paths, str):
-        paths = [paths]
 
-    reader = (
+def csv_reader(spark: SparkSession, opts: CsvOptions) -> DataFrameReader:
+    """A ``DataFrameReader`` carrying the reference's CSV option
+    semantics. Each ``option`` call is a JVM round trip, so a caller
+    reading many schema groups builds it once and sets ``.schema(...)``
+    per group."""
+    # Spark accepts one nullValue natively; the rest are mapped post-read.
+    primary_na = opts.na_values[0] if opts.na_values else ""
+    return (
         spark.read.option("sep", opts.delimiter)
         .option("quote", opts.quote)
         .option("header", str(opts.headers).lower())
@@ -73,94 +78,23 @@ def read_csv(
         .option("mode", "PERMISSIVE")
         .option("multiLine", str(opts.multiline).lower())
         .option("samplingRatio", "1.0")
+        .option("nullValue", primary_na)
     )
-    # Spark accepts one nullValue natively; the rest are mapped post-read.
-    primary_na = opts.na_values[0] if opts.na_values else ""
-    reader = reader.option("nullValue", primary_na)
-
-    if schema is not None:
-        df = reader.schema(schema).csv(paths)
-    elif opts.infer_schema:
-        # Read as strings first so extra NA sentinels null out *before*
-        # type inference (parity with csv_in.rs ordering), then re-infer.
-        raw = reader.option("inferSchema", "false").csv(paths)
-        raw = _apply_na_sentinels(raw, opts.na_values[1:])
-        df = _infer_string_columns(raw, opts.infer_rows)
-        if not opts.headers:
-            df = df.toDF(*[f"col_{i + 1}" for i in range(len(df.columns))])
-        return df
-    else:
-        df = reader.option("inferSchema", "false").csv(paths)
-
-    if not opts.headers:
-        df = df.toDF(*[f"col_{i + 1}" for i in range(len(df.columns))])
-    return _apply_na_sentinels(df, opts.na_values[1:])
 
 
 def _apply_na_sentinels(df: DataFrame, extra_na: tuple[str, ...]) -> DataFrame:
     """Null out remaining NA sentinels on string columns (cli.rs:41-43)."""
     if not extra_na:
         return df
-    na_list = list(extra_na)
+    na = ", ".join(sql_string(v) for v in extra_na)
     exprs = []
     for f_ in df.schema.fields:
+        c = quote_ident(f_.name)
         if isinstance(f_.dataType, T.StringType):
-            c = F.col(f_.name)
-            exprs.append(
-                F.when(c.isin(na_list), F.lit(None)).otherwise(c).alias(f_.name)
-            )
+            exprs.append(f"CASE WHEN {c} IN ({na}) THEN NULL ELSE {c} END AS {c}")
         else:
-            exprs.append(F.col(f_.name))
-    return df.select(*exprs)
-
-
-def _infer_string_columns(df: DataFrame, sample_rows: int) -> DataFrame:
-    """Per-column type inference over a sample: try i64 -> f64 -> bool,
-    else string — the reference's parse-probe order (csv_in.rs:171-232),
-    where any unparseable value makes the whole column Utf8.
-
-    Runs one small Spark job over ``sample_rows`` rows (the reference
-    samples --infer-rows=1000 by default), then applies lattice casts to
-    the full lazy plan.
-    """
-    sample = df.limit(sample_rows)
-    checks = []
-    for name in df.columns:
-        c = F.col(name)
-        nn = c.isNotNull()
-        checks.extend(
-            [
-                F.max(F.when(nn & c.try_cast("long").isNull(), 1).otherwise(0)).alias(
-                    f"{name}__not_i64"
-                ),
-                F.max(
-                    F.when(nn & c.try_cast("double").isNull(), 1).otherwise(0)
-                ).alias(f"{name}__not_f64"),
-                F.max(
-                    F.when(
-                        nn & ~F.lower(c).isin("true", "false"), 1
-                    ).otherwise(0)
-                ).alias(f"{name}__not_bool"),
-                F.max(F.when(nn, 1).otherwise(0)).alias(f"{name}__any"),
-            ]
-        )
-    row = sample.agg(*checks).collect()[0].asDict()
-
-    exprs = []
-    for name in df.columns:
-        if not row[f"{name}__any"]:
-            target = None  # all-null column stays string (unknown)
-        elif not row[f"{name}__not_i64"]:
-            target = "long"
-        elif not row[f"{name}__not_f64"]:
-            target = "double"
-        elif not row[f"{name}__not_bool"]:
-            target = "boolean"
-        else:
-            target = None
-        c = F.col(name)
-        exprs.append(c.try_cast(target).alias(name) if target else c)
-    return df.select(*exprs)
+            exprs.append(c)
+    return df.selectExpr(*exprs)
 
 
 def infer_csv_schemas_per_file(
@@ -185,17 +119,7 @@ def infer_csv_schemas_per_file(
     reads instead (infer_csv_schema_prefix).
     """
     opts = opts or CsvOptions()
-    reader = (
-        spark.read.option("sep", opts.delimiter)
-        .option("quote", opts.quote)
-        .option("header", str(opts.headers).lower())
-        .option("encoding", _ENCODINGS.get(opts.encoding.lower(), opts.encoding))
-        .option("mode", "PERMISSIVE")
-        .option("multiLine", str(opts.multiline).lower())
-        .option("nullValue", opts.na_values[0] if opts.na_values else "")
-        .option("inferSchema", "false")
-    )
-    raw = reader.csv(list(paths))
+    raw = csv_reader(spark, opts).option("inferSchema", "false").csv(list(paths))
     raw = _apply_na_sentinels(raw, opts.na_values[1:])
     names = (
         raw.columns
@@ -210,12 +134,12 @@ def infer_csv_schemas_per_file(
     # 4-aggregates-per-column design whose redundant try_casts made the
     # probe ~20x slower than the plain data scan.
     checks = []
-    for col in raw.columns:
+    for col in map(quote_ident, raw.columns):
         mask = (
-            f"CASE WHEN `{col}` IS NULL THEN CAST(NULL AS INT)"
-            f" WHEN try_cast(`{col}` AS BIGINT) IS NOT NULL THEN 3"
-            f" WHEN try_cast(`{col}` AS DOUBLE) IS NOT NULL THEN 2"
-            f" WHEN lower(`{col}`) IN ('true', 'false') THEN 4"
+            f"CASE WHEN {col} IS NULL THEN CAST(NULL AS INT)"
+            f" WHEN try_cast({col} AS BIGINT) IS NOT NULL THEN 3"
+            f" WHEN try_cast({col} AS DOUBLE) IS NOT NULL THEN 2"
+            f" WHEN lower({col}) IN ('true', 'false') THEN 4"
             f" ELSE 0 END"
         )
         checks.append(F.expr(f"bit_and({mask})"))
@@ -378,12 +302,20 @@ def infer_csv_schema_prefix(
     )
 
 
-def read_parquet(spark: SparkSession, paths: list[str] | str) -> DataFrame:
+def read_parquet(
+    spark: SparkSession,
+    paths: list[str] | str,
+    schema: T.StructType | None = None,
+) -> DataFrame:
     """Parquet scan (parquet_in.rs:13-44): Spark's vectorized reader with
-    row-group pruning and predicate pushdown for free."""
+    row-group pruning and predicate pushdown for free. Without
+    ``schema``, Spark infers it — a job that reads a footer; with one,
+    the scan starts no job before it runs, so the caller must know the
+    schema Spark would infer (see ``engine.spark_hostile``)."""
     if isinstance(paths, str):
         paths = [paths]
-    return spark.read.parquet(*paths)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*paths)
 
 
 def read_orc(spark: SparkSession, paths: list[str] | str) -> DataFrame:
@@ -532,17 +464,5 @@ def read_jsonl(
     )
     if schema is not None:
         # NullType columns (key never had a value) can't be scanned.
-        read_schema = T.StructType(
-            [
-                T.StructField(
-                    f.name,
-                    T.StringType()
-                    if isinstance(f.dataType, T.NullType)
-                    else f.dataType,
-                    f.nullable,
-                )
-                for f in schema.fields
-            ]
-        )
-        return reader.schema(read_schema).json(paths)
+        return reader.schema(readable_schema(schema)).json(paths)
     return reader.json(paths)

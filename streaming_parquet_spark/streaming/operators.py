@@ -32,22 +32,6 @@ def tumbling_window_agg(
     return df.groupBy(F.window(ts_col, window), *keys).agg(*aggs)
 
 
-def sliding_window_agg(
-    df: DataFrame,
-    ts_col: str = "ts",
-    window: str = "10 minutes",
-    slide: str = "5 minutes",
-    keys: list[str] | None = None,
-    watermark: str | None = "30 minutes",
-    aggs: list | None = None,
-) -> DataFrame:
-    keys = keys or []
-    if watermark and df.isStreaming:
-        df = df.withWatermark(ts_col, watermark)
-    aggs = aggs or [F.count(F.lit(1)).alias("n")]
-    return df.groupBy(F.window(ts_col, window, slide), *keys).agg(*aggs)
-
-
 def session_window_agg(
     df: DataFrame,
     ts_col: str = "ts",

@@ -30,15 +30,14 @@ from collections import defaultdict
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQueryListener
 
 from streaming_parquet_spark.engine import Engine
-from streaming_parquet_spark.plans.align import align_dataframe
-from streaming_parquet_spark.plans.unify import UnifiedSchema, unify_schemas
+from streaming_parquet_spark.plans.align import align_dataframe, union_aligned
+from streaming_parquet_spark.plans.unify import unify_schemas
 from streaming_parquet_spark.runspec import RunSpec
 from streaming_parquet_spark.sources.discover import InputFormat
-from streaming_parquet_spark.sources.readers import _apply_na_sentinels
+from streaming_parquet_spark.sources.readers import readable_schema
 
 # Ceiling on the auto-sized trigger (concurrency * cores): bounds batch
 # latency and failure-replay granularity on large clusters while leaving
@@ -113,21 +112,6 @@ class _ProgressTally(StreamingQueryListener):
             time.sleep(0.05)
 
 
-def _readable_schema(schema: T.StructType) -> T.StructType:
-    """Scans can't materialize NullType (the probe result for valueless
-    columns) — read as string, values are null either way."""
-    return T.StructType(
-        [
-            T.StructField(
-                f.name,
-                T.StringType() if isinstance(f.dataType, T.NullType) else f.dataType,
-                f.nullable,
-            )
-            for f in schema.fields
-        ]
-    )
-
-
 class StreamEngine:
     """Run a RunSpec as a resumable stream: file source -> align/union ->
     parquet (or csv) sink with checkpointing."""
@@ -136,12 +120,11 @@ class StreamEngine:
         self.spark = spark
         self._batch = Engine(spark)
 
-    def _streaming_sources(
-        self, spec: RunSpec
-    ) -> tuple[list[DataFrame], UnifiedSchema]:
+    def _aligned_streams(self, spec: RunSpec) -> list[DataFrame]:
         """Probe schemas batch-side (cheap, driver metadata), then open one
         readStream per (format, schema) group — same grouping trick as the
-        batch engine so stream width is bounded by distinct schemas."""
+        batch engine so stream width is bounded by distinct schemas — and
+        project each onto the unified schema with the batch aligner."""
         files = self._batch.discover(spec)
         if not files:
             raise ValueError("no input files discovered")
@@ -157,7 +140,11 @@ class StreamEngine:
 
         streams: list[DataFrame] = []
         for (fmt, _sjson), (paths, schema) in groups.items():
-            schema = _readable_schema(schema)
+            # Parity with the batch reader: Spark's nullValue takes one
+            # sentinel; the aligner nulls the rest (cli.rs:41-43). CSV
+            # only — ORC/JSONL carry typed nulls natively.
+            na_values = spec.na_values[1:] if fmt is InputFormat.CSV else ()
+            schema = readable_schema(schema)
             if fmt is InputFormat.PARQUET:
                 reader = self.spark.readStream.schema(schema).format("parquet")
             elif fmt is InputFormat.ORC:
@@ -215,27 +202,17 @@ class StreamEngine:
                 pattern = os.path.join(
                     parent, "{" + ",".join(sorted(names)) + "}"
                 )
-                stream = reader.load(pattern)
-                if fmt is InputFormat.CSV:
-                    # Parity with the batch reader: Spark's nullValue
-                    # takes one sentinel; the rest null out post-read
-                    # (cli.rs:41-43). CSV only — ORC/JSONL carry typed
-                    # nulls natively.
-                    stream = _apply_na_sentinels(stream, spec.na_values[1:])
-                streams.append(stream)
-        return streams, unified
+                streams.append(
+                    align_dataframe(
+                        reader.load(pattern), unified, spec.columns,
+                        spec.exclude, schema=schema, na_values=na_values,
+                    )
+                )
+        return streams
 
     def dataframe(self, spec: RunSpec) -> DataFrame:
         """The streaming align+UNION ALL DataFrame (unbounded)."""
-        streams, unified = self._streaming_sources(spec)
-        aligned = [
-            align_dataframe(s, unified, include=spec.columns, exclude=spec.exclude)
-            for s in streams
-        ]
-        out = aligned[0]
-        for other in aligned[1:]:
-            out = out.unionByName(other)
-        return out
+        return union_aligned(self._aligned_streams(spec))
 
     def _sink_count(self, out_dir: str, fmt: str, spec: RunSpec) -> int:
         """Rows currently committed in the file sink (0 if none yet)."""

@@ -712,3 +712,334 @@ def test_partitioned_txt_output(spark, engine, tmp_path):
     assert langs == ["lang=de", "lang=en"]
     en = spark.read.text(_os.path.join(out, "lang=en")).collect()
     assert sorted(r["value"] for r in en) == ["hello", "world"]
+
+
+# ---------------------------------------------------------------------------
+# Drift-concat plan cost: one projection per schema group, explicit-schema
+# parquet reads (no inference jobs) and single-scan write width.
+# ---------------------------------------------------------------------------
+
+
+def _pq(path, cols, **kw):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table(cols), str(path), **kw)
+
+
+def _jobs_started(spark, fn):
+    """``fn()``'s result and the ids of the Spark jobs it started."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count probe")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_mixed_concat_plan_starts_no_spark_jobs(engine, spark, tmp_path):
+    """CSV + three parquet schema variants: probing, unifying, reading
+    and aligning every group starts zero Spark jobs — parquet groups
+    read with their footer-probed schema instead of Spark's inference."""
+    import datetime as dt
+
+    import pyarrow as pa
+
+    d = tmp_path / "in"
+    _write(str(d / "a.csv"), "id,name,score\n1,x,0.5\n2,NA,1.5\n")
+    _write(str(d / "b.csv"), "name,id\ny,3\n")
+    _pq(d / "p1.parquet", {
+        "id": pa.array([4], pa.int64()), "name": pa.array(["p1"]),
+        "ts": pa.array([dt.datetime(2024, 1, 1, 8)], pa.timestamp("us")),
+    })
+    _pq(d / "p2.parquet", {
+        "name": pa.array(["p2"]), "id": pa.array([5], pa.int32()),
+        "score": pa.array([2.5], pa.float64()),
+    })
+    _pq(d / "p3.parquet", {
+        "id": pa.array([6], pa.int64()),
+        "ts": pa.array([dt.datetime(2024, 1, 2, 9)], pa.timestamp("ms", "UTC")),
+        "tags": pa.array([["a", "b"]], pa.list_(pa.string())),
+    })
+    spec = RunSpec(inputs=[str(d)])
+    (df, unified, files), jobs = _jobs_started(
+        spark, lambda: engine.dataframe(spec)
+    )
+    assert jobs == []
+    assert len(files) == 5
+    assert unified.names == ["id", "name", "score", "tags", "ts"]
+    rows = sorted(tuple(r) for r in df.collect())
+    assert rows == [
+        (1, "x", 0.5, None, None),
+        (2, None, 1.5, None, None),
+        (3, "y", None, None, None),
+        (4, "p1", None, None, dt.datetime(2024, 1, 1, 8)),
+        (5, "p2", 2.5, None, None),
+        # the session runs in UTC: the tz-aware instant keeps its clock
+        (6, None, None, "[a, b]", dt.datetime(2024, 1, 2, 9)),
+    ]
+
+
+def test_hostile_parquet_groups_keep_spark_inference(
+    engine, spark, tmp_path, monkeypatch
+):
+    """INT96 (probed as ns timestamps) and uint64 (no pyarrow mapping)
+    groups still read through Spark's own inference, and their values
+    are what the engine produced before explicit-schema reads."""
+    import datetime as dt
+
+    import pyarrow as pa
+
+    import streaming_parquet_spark.engine as engine_mod
+
+    d = tmp_path / "in"
+    d.mkdir()
+    _pq(d / "h96.parquet", {
+        "id": pa.array([7, 8], pa.int64()),
+        "ts": pa.array([dt.datetime(2024, 1, 2, 12, 30), None], pa.timestamp("ns")),
+    }, use_deprecated_int96_timestamps=True)
+    _pq(d / "u64.parquet", {
+        "id": pa.array([9], pa.int64()),
+        "big": pa.array([2**64 - 1], pa.uint64()),
+    })
+    _pq(d / "plain.parquet", {"id": pa.array([10], pa.int64())})
+
+    reads = {}
+    real = engine_mod.read_parquet
+
+    def spy(spark_, paths, schema=None):
+        reads[os.path.basename(paths[0])] = schema is not None
+        return real(spark_, paths, schema=schema)
+
+    monkeypatch.setattr(engine_mod, "read_parquet", spy)
+    df, _u, _f = engine.dataframe(RunSpec(inputs=[str(d)]))
+    assert reads == {"h96.parquet": False, "u64.parquet": False,
+                     "plain.parquet": True}
+    assert df.columns == ["big", "id", "ts"]
+    assert sorted((tuple(r) for r in df.collect()), key=lambda r: r[1]) == [
+        (None, 7, dt.datetime(2024, 1, 2, 12, 30)),
+        (None, 8, None),
+        ("18446744073709551615", 9, None),
+        (None, 10, None),
+    ]
+
+
+def test_probed_parquet_schema_matches_spark_inference(spark, tmp_path):
+    """Every Arrow type ``spark_hostile`` admits reads back under its
+    footer-probed schema exactly as under Spark's own inference: same
+    schema, same values. The types it refuses are the ones where the two
+    disagree."""
+    import datetime as dt
+    import decimal
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from streaming_parquet_spark.engine import spark_hostile
+
+    ts = dt.datetime(2024, 3, 4, 5, 6, 7, 123000)
+    admitted = {
+        "i8": pa.array([1, None], pa.int8()),
+        "i16": pa.array([2, None], pa.int16()),
+        "i32": pa.array([3, None], pa.int32()),
+        "i64": pa.array([4, None], pa.int64()),
+        "f32": pa.array([0.5, None], pa.float32()),
+        "f64": pa.array([1.5, None], pa.float64()),
+        "bool": pa.array([True, None]),
+        "str": pa.array(["s", None]),
+        "lstr": pa.array(["l", None], pa.large_string()),
+        "bin": pa.array([b"\x00b", None]),
+        "date": pa.array([dt.date(2024, 1, 1), None], pa.date32()),
+        "ts_ms": pa.array([ts, None], pa.timestamp("ms")),
+        "ts_us": pa.array([ts, None], pa.timestamp("us")),
+        "ts_ms_tz": pa.array([ts, None], pa.timestamp("ms", "UTC")),
+        "ts_us_tz": pa.array([ts, None], pa.timestamp("us", "Asia/Tokyo")),
+        "dec": pa.array([decimal.Decimal("12.34"), None], pa.decimal128(10, 2)),
+        "list": pa.array([[1, None], None], pa.list_(pa.int64())),
+        "struct": pa.array(
+            [{"a": 1, "b": "x"}, None],
+            pa.struct([("a", pa.int32()), ("b", pa.string())]),
+        ),
+        "map": pa.array([[("k", 1)], None], pa.map_(pa.string(), pa.int64())),
+    }
+    table = pa.table(admitted).append_column(
+        pa.field("required", pa.int64(), nullable=False),
+        pa.array([1, 2], pa.int64()),
+    )
+    path = str(tmp_path / "types.parquet")
+    pq.write_table(table, path)
+    arrow = pq.ParquetFile(path).schema_arrow
+    assert not any(spark_hostile(t) for t in arrow.types)
+
+    probed = from_arrow_schema(arrow, prefer_timestamp_ntz=True)
+    explicit = spark.read.schema(probed).parquet(path)
+    inferred = spark.read.parquet(path)
+    for got, want in zip(explicit.schema.fields, inferred.schema.fields):
+        assert got == want, got.name
+    assert explicit.schema == inferred.schema
+    assert explicit.collect() == inferred.collect()
+
+    refused = [
+        pa.timestamp("ns"),
+        pa.uint8(), pa.uint16(), pa.uint32(), pa.uint64(),
+        pa.list_(pa.uint64()),
+        pa.struct([("t", pa.timestamp("ns", "UTC"))]),
+        pa.map_(pa.string(), pa.uint32()),
+        pa.null(), pa.duration("us"), pa.time64("us"),
+    ]
+    assert all(spark_hostile(t) for t in refused)
+    # INT96 as pyarrow renders it on read
+    p96 = str(tmp_path / "int96.parquet")
+    pq.write_table(pa.table({"t": pa.array([ts], pa.timestamp("ns"))}), p96,
+                   use_deprecated_int96_timestamps=True)
+    assert spark_hostile(pq.ParquetFile(p96).schema_arrow.field("t").type)
+
+
+_ODD_NA = ("NA", "it's", "back\\slash")
+_ODD_ROWS = [
+    (1, None, 1.5, "ä"),
+    (2, None, None, "ö"),
+    (3, "plain", None, None),
+    (4, None, None, "é"),
+]
+
+
+def _odd_names_input(d):
+    _write(str(d / "x.csv"),
+           "a`b,c.d,e f,ünï\n1,it's,1.5,ä\n2,back\\slash,NA,ö\n")
+    _write(str(d / "y.csv"), "ünï,a`b,c.d\nit's,3,plain\né,4,NA\n")
+
+
+@pytest.mark.parametrize("infer_rows", [1000, 0])
+def test_alignment_quotes_names_and_na_sentinels(
+    engine, spark, tmp_path, infer_rows
+):
+    """Column names with a backtick, a dot, a space and non-ASCII
+    letters, a rename onto such a name, and NA sentinels holding a quote
+    and a backslash survive the SQL-text projection on the batch path,
+    under sampled and exact (one Spark job per header) CSV inference."""
+    d = tmp_path / "in"
+    _odd_names_input(d)
+    spec = RunSpec(inputs=[str(d)], na_values=_ODD_NA, infer_rows=infer_rows,
+                   rename={"e f": "e`f.g"})
+    df, _u, _f = engine.dataframe(spec)
+    assert df.columns == ["a`b", "c.d", "e`f.g", "ünï"]
+    assert sorted(tuple(r) for r in df.collect()) == _ODD_ROWS
+
+
+def test_stream_alignment_quotes_names_and_na_sentinels(spark, tmp_path):
+    """The same input through ``StreamEngine``, which shares the aligner."""
+    from streaming_parquet_spark.streaming import StreamEngine
+
+    d = tmp_path / "in"
+    _odd_names_input(d)
+    out = str(tmp_path / "out")
+    spec = RunSpec(inputs=[str(d)], out=out, out_format="parquet",
+                   state=str(tmp_path / "state"), na_values=_ODD_NA,
+                   rename={"e f": "e`f.g"})
+    assert StreamEngine(spark).run(spec).rows == 4
+    back = spark.read.parquet(out)
+    assert back.columns == ["a`b", "c.d", "e`f.g", "ünï"]
+    assert sorted(tuple(r) for r in back.collect()) == _ODD_ROWS
+
+
+def _scan_confs(spark):
+    conf = spark.conf
+    from streaming_parquet_spark.engine import _conf_bytes
+
+    return (_conf_bytes(conf.get("spark.sql.files.openCostInBytes")),
+            spark.sparkContext.defaultParallelism)
+
+
+def test_drift_concat_writes_at_single_scan_width(engine, spark, tmp_path):
+    """64 tiny files over 16 (format, schema) groups: each group's scan
+    alone would plan one task per file; the union is coalesced to the
+    width of one scan over all 64 files, so the rolling sink writes at
+    most that many files."""
+    import itertools
+
+    import pyarrow as pa
+
+    from streaming_parquet_spark.engine import single_scan_partitions
+
+    d = tmp_path / "in"
+    d.mkdir()
+    cols = ["k", "v", "w", "x"]
+    orders = list(itertools.permutations(cols))[:16]
+    rows = 0
+    for i in range(64):
+        order = orders[i % 16]
+        name = f"f{i:02d}"
+        vals = {c: [i * 10 + j for j in range(5)] for c in cols}
+        if i % 16 < 12:
+            lines = [",".join(order)] + [
+                ",".join(str(vals[c][j]) for c in order) for j in range(5)
+            ]
+            _write(str(d / f"{name}.csv"), "\n".join(lines) + "\n")
+        else:
+            _pq(d / f"{name}.parquet",
+                {c: pa.array(vals[c], pa.int64()) for c in order})
+        rows += 5
+    out = str(tmp_path / "out.parquet")
+    spec = RunSpec(inputs=[str(d)], out=out, single_file=False,
+                   roll_by_rows=10**9)
+    files = engine.discover(spec)
+    schemas = engine.probe_schemas(files, spec)
+    assert len({(f.format, s.json()) for f, s in zip(files, schemas)}) == 16
+    res = engine.run(spec)
+    assert res.rows == rows
+    open_cost, cores = _scan_confs(spark)
+    width = single_scan_partitions(
+        [f.size for f in files],
+        int(spark.conf.get("spark.sql.files.maxPartitionBytes")),
+        open_cost, cores,
+    )
+    assert width < 64
+    assert res.output.files_written <= width
+    assert spark.read.parquet(*res.output.paths).count() == rows
+
+
+def test_single_group_plan_keeps_its_scan_width(engine, spark, tmp_path):
+    """One schema group is one scan: no Repartition/Coalesce node, the
+    scan's own partition count, which ``single_scan_partitions``
+    reproduces — also with splitting in play under small split confs."""
+    import pyarrow as pa
+
+    from streaming_parquet_spark.engine import single_scan_partitions
+
+    d = tmp_path / "in"
+    d.mkdir()
+    paths = []
+    for i, n in enumerate([10, 2000, 300, 7000, 50, 4000, 1, 900]):
+        p = d / f"p{i}.parquet"
+        _pq(p, {"id": pa.array(range(n), pa.int64()),
+                "s": pa.array([f"row-{j}" for j in range(n)])},
+            row_group_size=256)
+        paths.append(str(p))
+    spec = RunSpec(inputs=[str(d)])
+    df, _u, files = engine.dataframe(spec)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "Repartition" not in plan and "Coalesce" not in plan
+    scan = spark.read.parquet(*paths)
+    assert df.rdd.getNumPartitions() == scan.rdd.getNumPartitions()
+
+    sizes = [f.size for f in files]
+    open_cost, cores = _scan_confs(spark)
+    conf = spark.conf
+    max_before = conf.get("spark.sql.files.maxPartitionBytes")
+    for max_bytes, cost in [(16 << 20, open_cost), (8 << 10, 4 << 10),
+                            (32 << 10, 1 << 10)]:
+        conf.set("spark.sql.files.maxPartitionBytes", str(max_bytes))
+        conf.set("spark.sql.files.openCostInBytes", str(cost))
+        try:
+            want = spark.read.parquet(*paths).rdd.getNumPartitions()
+        finally:
+            conf.set("spark.sql.files.maxPartitionBytes", max_before)
+            conf.unset("spark.sql.files.openCostInBytes")
+        assert single_scan_partitions(sizes, max_bytes, cost, cores) == want
